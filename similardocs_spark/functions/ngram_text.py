@@ -13,10 +13,20 @@ intent ("a text formed of the most frequent trigrams" — NGramText.scala:26).
 This module implements the documented intent deterministically: tokens are
 counted BEFORE the stream dedup, ranked by (frequency desc, first-occurrence
 asc), and the top `num_tokens` are joined with single spaces in rank order.
+
+`token_stream` and `ngram_text` are the scalar spec. The DataFrame form runs
+the tokenizer's Arrow kernel (functions/tokenize.py) up to, not including,
+its dedup, and counts and ranks the (row, token) stream in numpy.
 """
 from __future__ import annotations
 
+import sys
+from functools import lru_cache
+
+import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -31,7 +41,13 @@ from ..textnorm import (
     java_trim,
     uniform_string,
 )
-from .tokenize import _token_frame
+from .tokenize import _arrow_texts, _head, _list_offsets, _token_keys, _token_stream
+
+
+@lru_cache(maxsize=1)
+def _py_whitespace() -> str:
+    """The characters Python's str.strip() removes by default."""
+    return "".join(c for c in map(chr, range(sys.maxunicode + 1)) if c.isspace())
 
 
 def token_stream(text: str) -> list[str]:
@@ -70,31 +86,25 @@ def ngram_text(text: str, num_tokens: int) -> str | None:
 
 
 def _ngram_text_series(texts: pd.Series, num_tokens: int) -> pd.Series:
-    """Vectorized ngram_text over a batch: the tokenize.py explode-frame
-    pattern, but counting PRE-dedup frequencies via groupby(row, tok) and
-    ranking by (freq desc, first-occurrence asc). No per-row Python loop —
-    parity with the scalar `ngram_text` is pinned by tests (incl. Hypothesis)."""
-    # scalar form does Python str.strip() before tokenizing (strips a few
-    # non-Java-ws chars like NBSP at the edges) — replicate exactly
-    texts = texts.fillna("").str.strip()
-    frame = _token_frame(texts)
-    out = pd.Series([None] * len(texts), index=texts.index, dtype=object)
-    if not len(frame):
-        return out
-    frame = frame.reset_index(drop=True)
-    frame["pos"] = frame.index  # stream order is global-monotone per row
-    stats = (
-        frame.groupby(["row", "tok"], sort=False)["pos"]
-        .agg(freq="size", first="min")
-        .reset_index()
+    """Vectorized ngram_text over a batch: the tokenizer's pre-dedup Arrow
+    stream, counted per (row, token) and ranked by (freq desc,
+    first-occurrence asc). No per-row Python loop — parity with the scalar
+    `ngram_text` is pinned by tests (incl. Hypothesis)."""
+    # the scalar form does Python str.strip() before tokenizing (strips a
+    # few non-Java-ws chars like NBSP at the edges) — replicate exactly
+    stripped = pc.utf8_trim(_arrow_texts(texts), characters=_py_whitespace())
+    flat, row = _token_stream(stripped, pre_uniform=False)
+    _, first, freq = np.unique(_token_keys(flat, row), return_index=True, return_counts=True)
+    rank = first[np.lexsort((first, -freq, row[first]))]
+    top = _head(row[rank], num_tokens)
+    counts = np.bincount(row[rank[top]], minlength=len(texts))
+    lists = pa.ListArray.from_arrays(
+        _list_offsets(counts),
+        flat.take(pa.array(rank[top], type=pa.int64())),
+        mask=pa.array(np.bincount(row, minlength=len(texts)) == 0),
     )
-    stats = stats.sort_values(
-        ["row", "freq", "first"], ascending=[True, False, True], kind="stable"
-    )
-    top = stats.groupby("row", sort=False).head(num_tokens)
-    joined = top.groupby("row", sort=False)["tok"].agg(" ".join)
-    out.loc[joined.index] = joined
-    return out
+    joined = pc.binary_join(lists, " ").to_numpy(zero_copy_only=False)
+    return pd.Series(joined, index=texts.index, dtype=object)
 
 
 def ngram_text_col(
@@ -104,7 +114,7 @@ def ngram_text_col(
     out_col: str = "ngram_text",
 ) -> DataFrame:
     """DataFrame form: adds `out_col` = ngram_text(text, num_tokens). Arrow-
-    batched pandas UDF running the vectorized explode-frame analyzer (same
+    batched pandas UDF running the tokenizer's Arrow analyzer kernel (same
     cost class as the tokenizer itself); everything around it stays JVM-side."""
 
     @pandas_udf(T.StringType())

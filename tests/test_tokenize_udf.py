@@ -1,17 +1,18 @@
-"""Parity: vectorized pandas tokenizer == pure-Python spec (textnorm.analyze).
+"""Parity: Arrow tokenizer kernel == pure-Python spec (textnorm.analyze).
 
-Pandas-level tests run without Spark (fast, incl. Hypothesis properties); one
+Batch-level tests run without Spark (fast, incl. Hypothesis properties); one
 Spark round-trip test validates the Arrow UDF wiring end-to-end.
 """
 from __future__ import annotations
 
+import numpy as np
 import pandas as pd
 import pytest
-from hypothesis import given, settings
+from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
-from similardocs_spark.functions.tokenize import _tokenize_series
-from similardocs_spark.textnorm import analyze
+from similardocs_spark.functions.tokenize import _list_offsets, _tokenize_series
+from similardocs_spark.textnorm import MAX_TOKEN_LEN, analyze
 
 ADVERSARIAL = [
     "",
@@ -29,7 +30,28 @@ ADVERSARIAL = [
     "word" + "́" * 5,
     "tab\tsep\nnewline\rcr",
     " ".join(f"w{i:03d}" for i in range(300)),
+    "é" * 300,
+    "c" * 255 + "\xa0nbsp glued",
+    "a" * 254 + "bcdefgh",
+    "d" * 255 + "\u3000ideographic space",
+    "İstanbul \u212aELVIN \u212b Å",
 ]
+
+# whitespace-free runs past MAX_TOKEN_LEN (no Z or C category: no Java
+# whitespace inside), each followed by a separator and a short tail
+_LONG_RUNS = st.lists(
+    st.tuples(
+        st.text(
+            alphabet=st.characters(codec="utf-8", categories=("L", "N", "P", "M", "S")),
+            min_size=MAX_TOKEN_LEN + 1,
+            max_size=700,
+        ),
+        st.sampled_from(["", " ", "\xa0", "\u3000", "\t"]),
+        st.text(max_size=20),
+    ).map("".join),
+    min_size=1,
+    max_size=4,
+)
 
 
 def _check(cases: list[str]) -> None:
@@ -70,6 +92,23 @@ def test_property_parity(texts):
 )
 def test_property_parity_focused(texts):
     _check(texts)
+
+
+@settings(
+    max_examples=60,
+    deadline=None,
+    suppress_health_check=[HealthCheck.too_slow, HealthCheck.data_too_large],
+)
+@given(_LONG_RUNS)
+def test_property_parity_long_runs(texts):
+    _check(texts)
+    _check_ngram(texts, 4)
+
+
+def test_list_offsets_refuse_int32_overflow():
+    assert _list_offsets(np.array([2**31 - 1])).to_pylist() == [0, 2**31 - 1]
+    with pytest.raises(ValueError):
+        _list_offsets(np.array([2**31 - 1, 2]))
 
 
 @pytest.mark.spark
